@@ -38,4 +38,11 @@ object Fs {
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+
+  /** Read a small UTF-8 text file written by [[writeString]]. */
+  def readString(spark: SparkSession, path: String): String = {
+    val in = fileSystem(spark, path).open(new Path(path))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+  }
 }

@@ -47,6 +47,16 @@ class JsonDirSource(spark: SparkSession, dir: String) extends QuoteSource {
   * incremental-state contract of SURVEY §2.9: watermark read before
   * extract, advanced only after a successful sink write; replays are
   * deduped by the key anti-join, so the whole chain is effectively-once.
+  *
+  * Each run scans its source once. The transformed batch is persisted, and
+  * the emptiness check, the lake write, the stage load and the new
+  * watermark all read that one snapshot — a source that changes between
+  * evaluations (a re-fetched API body, a rewritten file) cannot advance the
+  * watermark past rows the lake or warehouse never received. The snapshot
+  * lives in the block manager at `MEMORY_AND_DISK`: memory pressure spills
+  * it to disk instead of dropping it, and only a lost executor makes Spark
+  * recompute a block from the source. Every read of a table this class
+  * writes uses its declared schema, so none pays a schema-inference job.
   */
 class Pipeline(
     spark: SparkSession,
@@ -62,39 +72,56 @@ class Pipeline(
 
   /** Incremental per-ticker extraction (reference E1+E2 chained):
     * watermark+1day as from-date, transform, lake append, stage overwrite,
-    * anti-join merge, then monotone state advance. Returns rows inserted. */
+    * anti-join merge, then monotone state advance. One aggregate over the
+    * persisted batch yields both the row count (S5 empty short-circuit)
+    * and the new watermark. Returns rows inserted. */
   def runStock(ticker: String): Long = {
     val wm = state.watermark("Stock", ticker)
     val from = java.time.LocalDate.parse(wm).plusDays(1).toString // F4
     val raw = graft.ops.Validate.requireSchema(
       source.eod(ticker, from), Schemas.eodRaw) // declared-schema contract (§1.2)
-    if (raw.isEmpty) return 0L // S5 empty-result short-circuit: no state move
-    val prices = Transforms.transformStock(raw, ticker)
-    Lake.writeStocks(prices, lakeRoot)
-    Scd0.stageLoad(prices, s"$warehouseRoot/stage_stock_prices")
-    val inserted = Scd0.mergeAppend(
-      spark.read.parquet(s"$warehouseRoot/stage_stock_prices"),
-      stocksWarehousePath, "stock_key")
-    val newWm = prices.agg(max(col("stock_date")).cast("string")).collect()(0).getString(0)
-    if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
-    inserted
+    val prices = Transforms.transformStock(raw, ticker).persist()
+    try {
+      val stats = prices.agg(count(lit(1)), max(col("stock_date")).cast("string")).head()
+      if (stats.getLong(0) == 0L) 0L // S5 empty-result short-circuit: no state move
+      else {
+        Lake.writeStocks(prices, lakeRoot)
+        val inserted = stageAndMerge(prices, "stage_stock_prices", stocksWarehousePath, "stock_key")
+        val newWm = stats.getString(1)
+        if (newWm != null && newWm > wm) state.advance("Stock", ticker, newWm)
+        inserted
+      }
+    } finally { prices.unpersist(): Unit }
   }
 
   /** Full-refresh market extraction (reference: "LA EXTRACCION DE LOS
-    * MERCADOS ES FULL", `main.py:22-23`); state date is informational. */
+    * MERCADOS ES FULL", `main.py:22-23`); state date is informational.
+    * Same single-snapshot shape as [[runStock]]; a listing with no common
+    * stock is empty after the transform and short-circuits the same way. */
   def runMarket(exchange: String): Long = {
-    val raw = source.symbols(exchange)
-    if (raw.isEmpty) return 0L
-    val markets = Transforms.transformMarket(raw)
-    Lake.writeMarkets(markets, lakeRoot)
-    Scd0.stageLoad(markets, s"$warehouseRoot/stage_markets")
-    val inserted = Scd0.mergeAppend(
-      spark.read.parquet(s"$warehouseRoot/stage_markets"),
-      marketsWarehousePath, "market_stockid")
-    state.advance("Market", exchange, java.time.LocalDate.now().toString)
-    inserted
+    val markets = Transforms.transformMarket(source.symbols(exchange)).persist()
+    try {
+      if (markets.count() == 0L) 0L
+      else {
+        Lake.writeMarkets(markets, lakeRoot)
+        val inserted = stageAndMerge(markets, "stage_markets", marketsWarehousePath, "market_stockid")
+        state.advance("Market", exchange, java.time.LocalDate.now().toString)
+        inserted
+      }
+    } finally { markets.unpersist(): Unit }
   }
 
-  def warehouseStocks(): DataFrame  = spark.read.parquet(stocksWarehousePath)
-  def warehouseMarkets(): DataFrame = spark.read.parquet(marketsWarehousePath)
+  /** Stage overwrite, then the SCD-0 merge from the stage, re-read with the
+    * batch's own schema. */
+  private def stageAndMerge(batch: DataFrame, stage: String, warehousePath: String,
+      key: String): Long = {
+    val stagePath = s"$warehouseRoot/$stage"
+    Scd0.stageLoad(batch, stagePath)
+    Scd0.mergeAppend(spark.read.schema(batch.schema).parquet(stagePath), warehousePath, key)
+  }
+
+  def warehouseStocks(): DataFrame =
+    spark.read.schema(Schemas.stockPrices).parquet(stocksWarehousePath)
+  def warehouseMarkets(): DataFrame =
+    spark.read.schema(Schemas.markets).parquet(marketsWarehousePath)
 }

@@ -1,7 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+
+import graft.core.Fs
 
 /** Incremental-extraction state store (reference `state.json` +
   * `API_manager.py:79-113`): a per-entity watermark with a full-backfill
@@ -9,62 +11,63 @@ import org.apache.spark.sql.functions._
   *
   * The reference keeps a single JSON document `{Stock:{ticker→date},
   * Market:{exchange→date}}`; dynamic keys don't map to a declared schema,
-  * so we store the same facts as a JSON-lines *table* of
-  * `(kind, key, watermark)` rows — readable with `spark.read.json`, and the
-  * advance rule is a distributed `groupBy.max`, so the store scales to any
-  * key cardinality (SURVEY §2.9).
+  * so we store the same facts as a JSON-lines file of
+  * `(kind, key, watermark)` objects, one line per tracked ticker or
+  * exchange (SURVEY §2.9). That is a few KB even for a whole exchange, so
+  * the store is read and rewritten on the driver — Hadoop FS API plus
+  * Jackson, no Spark job. Each call re-reads the file, so every handle on
+  * the same path sees the latest published state. The file stays readable
+  * with `spark.read.json`.
   */
 class StateStore(spark: SparkSession, path: String) {
   import StateStore._
 
-  private val schema = "kind STRING, key STRING, watermark STRING"
-
-  /** All watermarks; empty DataFrame if the store doesn't exist yet. */
-  def load(): DataFrame = {
-    if (graft.core.Fs.exists(spark, path)) spark.read.schema(schema).json(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
+  /** All watermarks by `(kind, key)`; empty if the store doesn't exist yet. */
+  private def read(): Map[(String, String), String] =
+    if (!Fs.exists(spark, path)) Map.empty
+    else Fs.readString(spark, path).split('\n').iterator
+      .filter(_.trim.nonEmpty).map(parse).toMap
 
   /** Watermark for one key; the missing-key sentinel triggers full backfill
     * (`API_manager.py:91`: "traer el dato mas antiguo disponible"). */
   def watermark(kind: String, key: String): String =
-    load().filter(col("kind") === kind && col("key") === key)
-      .select("watermark").collect().headOption.map(_.getString(0))
-      .getOrElse(Sentinel)
+    read().getOrElse((kind, key), Sentinel)
 
-  /** Monotone advance (`API_manager.py:104-106`: only move forward), merged
-    * distributed: union + groupBy max. Call AFTER the sink write succeeds —
-    * ordering is the at-least-once half of the effectively-once contract
-    * (the SCD-0 anti-join is the idempotence half). */
-  def advance(updates: DataFrame): Unit = {
-    val merged = load().unionByName(updates.selectExpr("kind", "key", "watermark"))
-      .groupBy("kind", "key").agg(max("watermark").as("watermark"))
-      .collect() // state cardinality = #tracked entities; tiny by contract
-    val lines = merged.map { r =>
-      s"""{"kind":${jstr(r.getString(0))},"key":${jstr(r.getString(1))},"watermark":${jstr(r.getString(2))}}"""
-    }.mkString("", "\n", "\n")
-    // write-then-atomic-rename through the Hadoop FS API: state is never
-    // observed half-written, on HDFS/S3A/local alike
-    val tmp = path + ".tmp"
-    graft.core.Fs.writeString(spark, tmp, lines)
-    graft.core.Fs.renameOverwrite(spark, tmp, path)
-  }
-
+  /** Monotone advance (`API_manager.py:104-106`: only move forward); a
+    * stale or equal watermark leaves the file untouched. Call AFTER the
+    * sink write succeeds — ordering is the at-least-once half of the
+    * effectively-once contract (the SCD-0 anti-join is the idempotence
+    * half). */
   def advance(kind: String, key: String, watermark: String): Unit = {
-    import spark.implicits._
-    advance(Seq((kind, key, watermark)).toDF("kind", "key", "watermark"))
+    val current = read()
+    if (current.get((kind, key)).forall(watermark > _)) {
+      val lines = current.updated((kind, key), watermark).toSeq.sortBy(_._1)
+        .map { case ((k, n), w) =>
+          s"""{"kind":${jstr(k)},"key":${jstr(n)},"watermark":${jstr(w)}}"""
+        }.mkString("", "\n", "\n")
+      // write-then-atomic-rename through the Hadoop FS API: state is never
+      // observed half-written, on HDFS/S3A/local alike
+      val tmp = path + ".tmp"
+      Fs.writeString(spark, tmp, lines)
+      Fs.renameOverwrite(spark, tmp, path)
+    }
   }
 
   /** Reset (reference `reboot.py:21-24` / `API_manager.py:211-222`). */
   def reset(): Unit =
-    graft.core.Fs.delete(spark, path)
+    Fs.delete(spark, path)
 }
 
 object StateStore {
   /** Full-backfill sentinel (`API_manager.py:77-78,91`), ISO-normalized. */
   val Sentinel = "1990-01-01"
+
+  private val mapper = new ObjectMapper()
+
+  private def parse(line: String): ((String, String), String) = {
+    val o = mapper.readTree(line)
+    ((o.get("kind").asText(), o.get("key").asText()), o.get("watermark").asText())
+  }
 
   private def jstr(s: String): String =
     "\"" + s.flatMap {

@@ -1,6 +1,16 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.TestHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.max
+
 import graft.SparkSpec
+import graft.core.Schemas
 import graft.queries.LastPrice
 
 /** End-to-end replay of the reference's smoke scenario (`main.py:49-102`):
@@ -115,4 +125,110 @@ class PipelineSpec extends SparkSpec {
     val out = spark.sql(LastPrice.sqlText, Map("ticker" -> "AAPL")).collect()
     assert(out.length === 1 && out.head.getString(2) === "Apple Inc")
   }
+
+  /** Number of Spark jobs `body` submits from this thread, counted by a
+    * job tag that only its jobs carry. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"pipeline-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try body
+    finally {
+      sc.removeJobTag(tag)
+      TestHooks.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  /** `dir/eod/<ticker>.json` holding `days` consecutive daily bars. */
+  private def writeEod(dir: String, ticker: String, days: Int): Unit = {
+    val bars = (0 until days).map { i =>
+      val d = java.time.LocalDate.of(2024, 3, 1).plusDays(i.toLong)
+      s"""{"date": "$d", "open": 10.0, "high": 11.0, "low": 9.0, "close": 10.5, "adjusted_close": 10.5, "volume": ${1000 + i}}"""
+    }
+    val f = Paths.get(s"$dir/eod/$ticker.json")
+    Files.createDirectories(f.getParent)
+    Files.write(f, bars.mkString("[\n", ",\n", "\n]\n").getBytes(StandardCharsets.UTF_8))
+  }
+
+  test("one runStock reads one snapshot of a source that changes on every read") {
+    // each evaluation of the extract yields a later date, as a re-fetched
+    // API body would: the lake, the warehouse and the watermark must all
+    // come from the same evaluation
+    val root = tmpDir("drift")
+    val p = new Pipeline(spark, new DriftingSource(spark),
+      s"$root/lake", s"$root/wh", s"$root/state.json")
+    assert(p.runStock("DRFT") === 1L)
+    def keys(df: DataFrame) = df.select("stock_key").collect().map(_.getString(0)).toSet
+    assert(keys(Lake.readStocks(spark, p.lakeRoot)) === keys(p.warehouseStocks()))
+    val maxDate = p.warehouseStocks().agg(max("stock_date").cast("string")).head().getString(0)
+    assert(p.state.watermark("Stock", "DRFT") === maxDate)
+  }
+
+  test("an incremental runStock runs 8 Spark jobs") {
+    // measured: 3 for the aggregate over the persisted batch (adaptive
+    // execution builds the cache as its own stage), 1 lake write, 1 stage
+    // load, 3 for the SCD-0 merge's one observed write (key broadcast,
+    // in-batch dedup shuffle, write). The state file and the
+    // declared-schema reads run none. With a Spark-read state store,
+    // inferred schemas and a cache-count-append merge the same call ran 16.
+    val root = tmpDir("jobs")
+    writeEod(s"$root/api", "JOBS", 5)
+    val p = new Pipeline(spark, new JsonDirSource(spark, s"$root/api"),
+      s"$root/lake", s"$root/wh", s"$root/state.json")
+    assert(p.runStock("JOBS") === 5L)
+    writeEod(s"$root/api", "JOBS", 6)
+    var inserted = -1L
+    val jobs = jobsOf { inserted = p.runStock("JOBS") }
+    assert(inserted === 1L)
+    assert(jobs === 8)
+  }
+
+  test("runStock unpersists its batch after a run, an empty extract and a failed merge") {
+    // relative to the start: suites share one session, and another suite's
+    // cached data is not this test's leak
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val p = mkPipeline()
+    assert(p.runStock("AAPL") === 3L)
+    assert(persisted -- before === Set.empty)
+    assert(p.runStock("AAPL") === 0L) // watermark past the data: empty extract
+    assert(persisted -- before === Set.empty)
+    // a warehouse path that holds no parquet makes the merge's scan throw
+    val broken = mkPipeline()
+    Files.createDirectories(Paths.get(broken.warehouseRoot))
+    Files.write(Paths.get(broken.stocksWarehousePath), "not parquet".getBytes(StandardCharsets.UTF_8))
+    intercept[Exception](broken.runStock("AAPL"))
+    assert(persisted -- before === Set.empty)
+    assert(broken.state.watermark("Stock", "AAPL") === StateStore.Sentinel)
+  }
+}
+
+/** Evaluations of [[DriftingSource]]'s extract so far, JVM-wide: local
+  * mode runs tasks in the driver JVM, so every evaluation sees it. */
+object DriftingSource {
+  val evaluations = new AtomicInteger()
+}
+
+/** A source whose one EOD bar moves a day later on every evaluation of the
+  * returned DataFrame — the shape of an API body re-fetched, or a JSON file
+  * rewritten, between two scans. */
+final class DriftingSource(spark: SparkSession) extends QuoteSource {
+  def eod(ticker: String, fromDate: String): DataFrame = {
+    val bars = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      val d = java.time.LocalDate.of(2024, 6, 1)
+        .plusDays(DriftingSource.evaluations.incrementAndGet().toLong)
+      Iterator(Row(d.toString, 10.0, 11.0, 9.0, 10.5, 10.5, 1000L))
+    }
+    spark.createDataFrame(bars, Schemas.eodRaw)
+  }
+  def symbols(exchange: String): DataFrame = throw new ExchangeNotFound(exchange)
 }

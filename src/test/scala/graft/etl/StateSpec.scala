@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.core.Fs
 
 class StateSpec extends SparkSpec {
 
@@ -43,5 +44,43 @@ class StateSpec extends SparkSpec {
     st.advance("Market", "NASDAQ", "2024-06-04")
     val st2 = new StateStore(spark, p) // fresh handle, re-read from disk
     assert(st2.watermark("Market", "NASDAQ") === "2024-06-04")
+  }
+
+  test("keys holding quotes, backslashes and newlines round-trip") {
+    val p = tmpDir("state") + "/state.json"
+    val key = "a\"b\\c\nd"
+    new StateStore(spark, p).advance("Stock", key, "2024-06-03")
+    val st = new StateStore(spark, p)
+    assert(st.watermark("Stock", key) === "2024-06-03")
+    assert(st.watermark("Stock", "a\"b\\c") === StateStore.Sentinel)
+  }
+
+  test("a state file in the on-disk format reads back unchanged") {
+    // the bytes the Spark-based store (spark.read.json + groupBy.max) wrote
+    // for these advances: one JSON object per line, control characters as
+    // four-digit unicode escapes, a trailing newline
+    val odd = "q\"b\\s\nn"
+    val lines = Seq(
+      """{"kind":"Market","key":"NASDAQ","watermark":"2024-06-04"}""",
+      """{"kind":"Stock","key":"AAPL","watermark":"2024-06-05"}""",
+      """{"kind":"Stock","key":"q\"b\\s""" + "\\u000a" + """n","watermark":"2024-06-03"}""")
+    val p = tmpDir("state") + "/state.json"
+    Fs.writeString(spark, p, lines.mkString("", "\n", "\n"))
+    val st = new StateStore(spark, p)
+    assert(st.watermark("Market", "NASDAQ") === "2024-06-04")
+    assert(st.watermark("Stock", "AAPL") === "2024-06-05")
+    assert(st.watermark("Stock", odd) === "2024-06-03")
+    st.advance("Stock", "AAPL", "2024-06-01") // stale: the file is untouched
+    assert(Fs.readString(spark, p) === lines.mkString("", "\n", "\n"))
+    st.advance("Stock", "MSFT", "2024-06-04") // a new key: one line more
+    val msft = """{"kind":"Stock","key":"MSFT","watermark":"2024-06-04"}"""
+    assert(Fs.readString(spark, p) ===
+      Seq(lines(0), lines(1), msft, lines(2)).mkString("", "\n", "\n"))
+    // and the file stays a JSON-lines table for Spark
+    val table = spark.read.schema("kind STRING, key STRING, watermark STRING").json(p)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(table === Set(("Market", "NASDAQ", "2024-06-04"),
+      ("Stock", "AAPL", "2024-06-05"), ("Stock", "MSFT", "2024-06-04"),
+      ("Stock", odd, "2024-06-03")))
   }
 }

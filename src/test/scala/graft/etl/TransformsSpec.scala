@@ -1,12 +1,28 @@
 package graft.etl
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
+import graft.core.Schemas
 
 class TransformsSpec extends SparkSpec {
 
   lazy val source = new JsonDirSource(spark, fixtures)
+
+  private def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+
+  // Tables the pipeline writes are read back with these declared schemas,
+  // not inferred ones: drift here must fail, not read as null columns.
+  test("transformStock output is Schemas.stockPrices: names, types, order") {
+    val out = Transforms.transformStock(source.eod("AAPL", "1990-01-01"), "AAPL")
+    assert(shape(out.schema) === shape(Schemas.stockPrices))
+  }
+
+  test("transformMarket output is Schemas.markets: names, types, order") {
+    val out = Transforms.transformMarket(source.symbols("NASDAQ"))
+    assert(shape(out.schema) === shape(Schemas.markets))
+  }
 
   test("transformStock: renames, key format, date parts, dropped columns") {
     val out = Transforms.transformStock(source.eod("AAPL", "1990-01-01"), "AAPL")

@@ -42,4 +42,25 @@ class Scd0Spec extends SparkSpec {
     assert(Scd0.mergeAppend(batch, path, "k") === 0)
     assert(spark.read.parquet(path).count() === 3)
   }
+
+  test("an empty delta leaves the table's files untouched") {
+    val path = tmpDir("wh") + "/t"
+    assert(Scd0.mergeAppend(df(), path, "k") === 0) // empty stage: no table
+    assert(!new java.io.File(path).exists())
+    Scd0.mergeAppend(df("a" -> 1, "b" -> 2), path, "k")
+    def files = new java.io.File(path).list().toSet
+    val before = files
+    assert(Scd0.mergeAppend(df("a" -> 1), path, "k") === 0) // replay: no new keys
+    assert(files === before) // no zero-row file appended
+  }
+
+  test("a crashed merge's pending delta is discarded, never committed") {
+    val path = tmpDir("wh") + "/t"
+    Scd0.mergeAppend(df("a" -> 1), path, "k")
+    // what a merge that died before its renames leaves behind
+    df("z" -> 26).write.parquet(path + "._pending")
+    assert(Scd0.mergeAppend(df("b" -> 2), path, "k") === 1)
+    assert(spark.read.parquet(path).as[(String, Int)].collect().toMap === Map("a" -> 1, "b" -> 2))
+    assert(!new java.io.File(path + "._pending").exists())
+  }
 }

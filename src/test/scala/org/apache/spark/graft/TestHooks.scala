@@ -1,5 +1,6 @@
 package org.apache.spark.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.util.ShutdownHookManager
 
 /** Test-scope bridge into Spark's priority-ordered shutdown-hook manager
@@ -16,4 +17,10 @@ object TestHooks {
 
   def addPriorityHook(priority: Int)(f: () => Unit): AnyRef =
     ShutdownHookManager.addShutdownHook(priority)(f)
+
+  /** Block until every event posted so far has reached every listener
+    * (`LiveListenerBus` is `private[spark]`), so listener counts read
+    * afterwards are complete. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
